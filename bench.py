@@ -2,7 +2,8 @@
 """Benchmark: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
 Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
+   "master": "local[N]", "defaultParallelism": N}
 
 Each query is materialized through the noop sink (full execution, no
 driver collection) on local[$SPARK_GRAFT_CPUS].
@@ -136,6 +137,10 @@ def main() -> None:
                     batch_walls, key=lambda b: b["batch_id"]
                 ),
                 "sf": sf,
+                # the CPU contract this run actually had, read from the
+                # live context rather than trusted from $SPARK_GRAFT_CPUS
+                "master": spark.sparkContext.master,
+                "defaultParallelism": spark.sparkContext.defaultParallelism,
             }
         )
     )

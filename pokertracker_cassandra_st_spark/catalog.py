@@ -3,9 +3,21 @@
 The reference's "catalog" is a single Cassandra keyspace with one table
 (``/root/reference/src/test/resources/initial_db.sql:1-12``); here the
 catalog is the set of parquet tables the driver materializes
-(TESTDATA.md). Loading is lazy — ``spark.read.parquet`` only binds the
-schema; Catalyst prunes columns and pushes predicates into the scan, so
-each query's plan reads only what it needs (checked in tests/test_plans).
+(TESTDATA.md). Loading is lazy and binds a memoized schema: the first
+``table()`` of a file lets Spark infer its schema (one Spark job), and
+every later call passes that ``StructType`` back through
+``spark.read.schema(...)``, which launches no job. The memo key is
+``_stat_key(path)`` — (absolute path, inode, mtime_ns, size) — plus the
+``spark.sql.legacy.parquet.nanosAsLong`` conf that changes how
+``events.ts`` is inferred, so a regenerated file or a flipped conf
+re-infers on its own. The ``events.ts`` footer probe uses the same
+stat key.
+
+This is schema binding, not result caching: every call returns a fresh
+DataFrame, each execution scans the file again, and nothing is
+registered with the CacheManager (tests/test_plans pins all three).
+Catalyst prunes columns and pushes predicates into the scan, so each
+query's plan reads only what it needs (checked in tests/test_plans).
 
 Scale notes: at 100 TB each logical table would be a directory of many
 parquet files (possibly partitioned by date/bucket); ``spark.read
@@ -15,9 +27,11 @@ pruning comes for free when the layout is hive-partitioned.
 
 from __future__ import annotations
 
+import os
 from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -63,26 +77,51 @@ def events_ts_tz_adjusted(sf_dir: str) -> bool:
     return "tz=" in _events_ts_type(sf_dir)
 
 
-def _events_ts_type(sf_dir: str) -> str:
-    """Raw pyarrow type string of events.ts, cached per (path, mtime,
-    size) — the driver is documented to REGENERATE testdata mid-round,
-    so a path-only cache could keep serving a stale unit to a long-lived
-    process. The footer probe is metadata-only; re-probing after a
-    regeneration costs microseconds."""
-    import os
+def _stat_key(path: str) -> tuple[str, int, int, int]:
+    """Identity of one on-disk file version: (absolute path, inode,
+    mtime_ns, size). Testdata can be regenerated in place under a
+    long-lived process, so a path-only memo could keep serving stale
+    metadata; a rewrite changes the inode or mtime, and both memos
+    below are keyed on this tuple."""
+    st = os.stat(path)
+    return (os.path.abspath(path), st.st_ino, st.st_mtime_ns, st.st_size)
 
-    st = os.stat(f"{sf_dir}/events.parquet")
-    key = (sf_dir, st.st_mtime_ns, st.st_size)
+
+def _events_ts_type(sf_dir: str) -> str:
+    """Raw pyarrow type string of events.ts, memoized per ``_stat_key``.
+    The footer probe is metadata-only; re-probing after a regeneration
+    costs microseconds."""
+    path = f"{sf_dir}/events.parquet"
+    key = _stat_key(path)
     if key not in _TS_TYPE_CACHE:
         import pyarrow.parquet as pq
 
-        _TS_TYPE_CACHE[key] = str(
-            pq.read_schema(f"{sf_dir}/events.parquet").field("ts").type
-        )
+        _TS_TYPE_CACHE[key] = str(pq.read_schema(path).field("ts").type)
     return _TS_TYPE_CACHE[key]
 
 
-_TS_TYPE_CACHE: dict[tuple[str, int, int], str] = {}
+_TS_TYPE_CACHE: dict[tuple[str, int, int, int], str] = {}
+_SCHEMA_CACHE: dict[tuple[str, int, int, int, str], StructType] = {}
+
+
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema bound from the memo.
+
+    Spark's own inferred ``StructType`` is what gets memoized, so the
+    bound schema is the one inference would produce by construction.
+    The nanos conf is part of the key: it decides whether a
+    TIMESTAMP(NANOS) column infers as ``long``. Two threads racing on a
+    first read both infer and store the same schema, so no lock."""
+    key = (
+        *_stat_key(path),
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
+    )
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMA_CACHE[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -104,15 +143,17 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one table from an sf directory (events.ts normalized, see
-    ``normalize_events_ts``)."""
+    """Load one table from an sf directory with its memoized schema
+    (module doc; events.ts normalized, see ``normalize_events_ts``).
+    Returns a fresh DataFrame on every call."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; have {TABLES}")
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         if events_ts_unit(sf_dir) == "ns":
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalize_events_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        return normalize_events_ts(_read(spark, path))
+    return _read(spark, path)
 
 
 def tables(spark: SparkSession, sf_dir: str, *names: str) -> SimpleNamespace:
@@ -130,7 +171,5 @@ def scratch_dir(sf_dir: str, name: str) -> str:
     mirrors what rollup_hourly already did. Overwrite mode still
     reclaims each scale's own directory run-to-run.
     """
-    import os
-
     tag = os.path.basename(sf_dir.rstrip("/")) or "default"
     return f"/root/repo/.scratch/{name}_{tag}"

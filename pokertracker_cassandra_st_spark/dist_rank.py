@@ -107,17 +107,20 @@ def _with_bucket(df: DataFrame, primary: str, n_buckets: int) -> DataFrame:
     pre-aggregated statistic rows, never data."""
     fine = n_buckets * _FINE_MULT
     ext = df.agg(F.min(primary).alias("_mn"), F.max(primary).alias("_mx"))
+    # all grid arithmetic runs in double: in the key's own integer type
+    # (x - min) * fine wraps for wide spans (an int key spanning 2e6
+    # overflows at fine = 2048), the wrapped negative cell finds no
+    # _bmap entry and the row is lost. The cast is monotone, so b(x)
+    # keeps every property the docstring relies on.
+    x = F.col(primary).cast("double")
+    mn, mx = F.col("_mn").cast("double"), F.col("_mx").cast("double")
     cell = (
-        F.when(F.col(primary).isNull(), F.lit(-1))
-        .when(F.col("_mx") == F.col("_mn"), F.lit(0))
+        F.when(x.isNull(), F.lit(-1))
+        .when(mx == mn, F.lit(0))
         .otherwise(
             F.least(
                 F.lit(fine - 1),
-                F.floor(
-                    (F.col(primary) - F.col("_mn"))
-                    * fine
-                    / (F.col("_mx") - F.col("_mn"))
-                ).cast("int"),
+                F.floor((x - mn) * fine / (mx - mn)).cast("int"),
             )
         )
     )
@@ -153,9 +156,8 @@ def _with_bucket(df: DataFrame, primary: str, n_buckets: int) -> DataFrame:
         F.coalesce(F.sum("_c").over(w_prev), F.lit(0)).alias("_cum"),
         F.sum("_c").over(w_tot).alias("_tot"),
     )
-    heavy = (F.col("_c") * n_buckets > F.col("_tot")) & (
-        F.col("_chi") > F.col("_clo")
-    )
+    clo, chi = F.col("_clo").cast("double"), F.col("_chi").cast("double")
+    heavy = (F.col("_c") * n_buckets > F.col("_tot")) & (chi > clo)
     bucket_of = (
         f"least({n_buckets - 1}, cast((_cum + _c * j div {_REFINE_SUB}) "
         f"* {n_buckets} div _tot as int))"
@@ -191,11 +193,7 @@ def _with_bucket(df: DataFrame, primary: str, n_buckets: int) -> DataFrame:
     ).otherwise(
         F.least(
             F.lit(_REFINE_SUB - 1),
-            F.floor(
-                (F.col(primary) - F.col("_clo"))
-                * _REFINE_SUB
-                / (F.col("_chi") - F.col("_clo"))
-            ).cast("int"),
+            F.floor((x - clo) * _REFINE_SUB / (chi - clo)).cast("int"),
         )
     )
     return (
@@ -243,8 +241,9 @@ def range_prefix(
             raise ValueError(f"totals sources must be in sums: {missing}")
     # output-name collision guard: a sums/totals destination that
     # already exists on the frame, duplicates another destination, or
-    # matches the internal helper-name pattern (_b, _<dst>_loc/_off/
-    # _tot) would silently produce duplicate/ambiguous columns.
+    # matches an internal helper name (_with_bucket's _b/_fc/_mn/_mx/
+    # _clo/_chi/_heavy/_bmap, _<dst>_loc/_off/_tot) would silently
+    # produce duplicate/ambiguous columns.
     dsts = [*sums.values(), *(totals or {}).values()]
     dupes = sorted({d for d in dsts if dsts.count(d) > 1})
     if dupes:
@@ -254,8 +253,9 @@ def range_prefix(
         raise ValueError(
             f"output columns already exist on the frame: {clashes}"
         )
-    helpers = {"_b", "_fc"} | {
-        f"_{d}_{suf}" for d in dsts for suf in ("loc", "off", "tot")
+    helpers = {
+        "_b", "_fc", "_mn", "_mx", "_clo", "_chi", "_heavy", "_bmap",
+        *(f"_{d}_{suf}" for d in dsts for suf in ("loc", "off", "tot")),
     }
     helper_clash = sorted(
         (set(dsts) | set(df.columns)) & helpers
@@ -325,6 +325,11 @@ def range_row_number(
     to every row — derived from the per-bucket totals the algorithm
     already aggregates, NOT a second scan of ``df``.
     """
+    if "_one" in df.columns:
+        # the count source below would overwrite it, then drop it
+        raise ValueError(
+            "column names collide with range_row_number helpers: ['_one']"
+        )
     out = range_prefix(
         df.withColumn("_one", F.lit(1)),
         order_cols,

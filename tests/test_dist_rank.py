@@ -110,3 +110,26 @@ def test_skewed_range_buckets_balanced(spark):
     # bucket 0), and the mass spread over most of the key space
     assert max(counts.values()) <= 2 * ideal
     assert len(counts) >= 24
+
+
+def test_wide_int_span_keeps_every_row(spark):
+    """(x - min) * fine computed in the key's int type wrapped for a
+    2e6 span (fine = 2048): the wrapped rows found no bucket and 475
+    of 1000 were silently dropped. The grid now runs in double."""
+    df = spark.createDataFrame([(i * 2000,) for i in range(1000)], "x int")
+    got = range_row_number(df, ["x"], "rn")
+    assert got.count() == 1000
+    assert [r.rn for r in got.orderBy("x").collect()] == list(range(1, 1001))
+
+
+@pytest.mark.parametrize("helper", ["_clo", "_chi", "_heavy", "_bmap", "_mn", "_mx"])
+def test_bucket_helper_name_collision_raises(spark, helper):
+    df = _frame(spark, CASES["tiny"]).withColumn(helper, F.lit(0))
+    with pytest.raises(ValueError, match="collide with range_prefix helpers"):
+        range_prefix(df, ["x", "k"], {"w": "pw"}, inclusive=True)
+
+
+def test_row_number_helper_name_collision_raises(spark):
+    df = _frame(spark, CASES["tiny"]).withColumn("_one", F.lit(0))
+    with pytest.raises(ValueError, match="range_row_number helpers"):
+        range_row_number(df, ["x", "k"], "rn")

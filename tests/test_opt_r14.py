@@ -85,3 +85,29 @@ def test_with_bucket_monotone_and_branch_consistent(spark):
     again = _with_bucket(df, "x", 32).select("x", F.col("_b").alias("_b2"))
     j = out.join(again, "x")
     assert j.filter(F.col("_b") != F.col("_b2")).count() == 0
+
+
+def _fake_frame(mode):
+    # the two raises are decided from the session alone; a stand-in
+    # session avoids leaving a mode or checkpoint dir on the shared one
+    from types import SimpleNamespace
+
+    session = SimpleNamespace(
+        conf=SimpleNamespace(get=lambda key, default=None: mode),
+        sparkContext=SimpleNamespace(getCheckpointDir=lambda: None),
+    )
+    return SimpleNamespace(sparkSession=session)
+
+
+def test_unknown_barrier_mode_raises():
+    from pokertracker_cassandra_st_spark.ckpt import materialized
+
+    with pytest.raises(ValueError, match="unknown barrier mode 'lcoal'"):
+        materialized(_fake_frame("lcoal"))
+
+
+def test_reliable_barrier_without_checkpoint_dir_raises():
+    from pokertracker_cassandra_st_spark.ckpt import materialized
+
+    with pytest.raises(ValueError, match="needs a checkpoint dir"):
+        materialized(_fake_frame("reliable"))

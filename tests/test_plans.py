@@ -59,6 +59,113 @@ def test_scan_pushdown_reaches_parquet(spark, sf_dir):
     assert "GreaterThan" in pushed
 
 
+# ---- catalog: memoized schema binding, not result caching ---------------- #
+
+
+def _group_jobs(spark, group: str, fn) -> int:
+    """Spark jobs launched by ``fn()``, counted from the status store
+    (``statusTracker().getJobIdsForGroup`` filters
+    ``statusStore().jobsList``) after the listener bus has drained."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write_parquet(path, pdf) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), str(path))
+
+
+def test_catalog_second_read_launches_no_job(spark, tmp_path):
+    import pandas as pd
+
+    from pokertracker_cassandra_st_spark.catalog import table
+
+    _write_parquet(tmp_path / "region.parquet", pd.DataFrame({"r_regionkey": [0, 1]}))
+    # the first read of a file infers its schema (a Spark job) ...
+    first = _group_jobs(spark, "catalog-first", lambda: table(spark, str(tmp_path), "region"))
+    assert first >= 1
+    # ... every later read binds the memoized schema and launches none
+    again = _group_jobs(spark, "catalog-again", lambda: table(spark, str(tmp_path), "region"))
+    assert again == 0
+    assert table(spark, str(tmp_path), "region").count() == 2
+
+
+def test_catalog_rewritten_file_rebinds_schema(spark, tmp_path):
+    import pandas as pd
+
+    from pokertracker_cassandra_st_spark.catalog import table
+
+    path = tmp_path / "region.parquet"
+    _write_parquet(path, pd.DataFrame({"r_regionkey": [0, 1]}))
+    assert table(spark, str(tmp_path), "region").columns == ["r_regionkey"]
+    _write_parquet(path, pd.DataFrame({"r_regionkey": [0, 1, 2], "r_name": ["a", "b", "c"]}))
+    df = table(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_name"]
+    assert sorted(r.r_name for r in df.collect()) == ["a", "b", "c"]
+
+
+def test_catalog_events_nanos_layout_memoized(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import TimestampType
+
+    from pokertracker_cassandra_st_spark.catalog import events_ts_unit, table
+
+    ts = [1_700_000_000_123_456_000, 1_700_000_001_000_001_000]
+    pq.write_table(
+        pa.table({"event_id": [1, 2], "ts": pa.array(ts, pa.timestamp("ns"))}),
+        str(tmp_path / "events.parquet"),
+    )
+    assert events_ts_unit(str(tmp_path)) == "ns"
+    try:
+        for _ in range(2):  # inferred, then bound from the memo
+            df = table(spark, str(tmp_path), "events")
+            assert isinstance(df.schema["ts"].dataType, TimestampType)
+            got = df.selectExpr("event_id", "unix_micros(ts) AS us").orderBy("event_id")
+            assert [r.us for r in got.collect()] == [t // 1000 for t in ts]
+    finally:
+        spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+
+
+def test_catalog_is_not_result_caching(spark, sf_dir, tmp_path):
+    import pandas as pd
+
+    from pokertracker_cassandra_st_spark.catalog import table
+
+    a, b = table(spark, sf_dir, "nation"), table(spark, sf_dir, "nation")
+    assert a is not b  # a fresh DataFrame per call
+    a.count(), b.count()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    # each execution scans the file: a rewrite with the same schema is
+    # seen by the next call, never served from an earlier result
+    path = tmp_path / "region.parquet"
+    _write_parquet(path, pd.DataFrame({"r_regionkey": [0, 1]}))
+    assert table(spark, str(tmp_path), "region").count() == 2
+    _write_parquet(path, pd.DataFrame({"r_regionkey": [0, 1, 2, 3]}))
+    assert table(spark, str(tmp_path), "region").count() == 4
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_catalog_self_join_of_two_reads_resolves(spark, sf_dir):
+    from pokertracker_cassandra_st_spark.catalog import table
+
+    # two calls carry distinct attribute ids, so a self-join condition
+    # naming both sides is not the trivially-true a.x == a.x
+    a, b = table(spark, sf_dir, "customer"), table(spark, sf_dir, "customer")
+    got = a.join(b, a["c_nationkey"] == b["c_custkey"]).select(a["c_custkey"]).count()
+    custkeys = {r.c_custkey for r in a.select("c_custkey").collect()}
+    want = a.filter(a["c_nationkey"].isin(sorted(custkeys))).count()
+    assert got == want > 0
+
+
 def test_bounded_dims_broadcast(spark, sf_dir):
     plan = plan_of(spark, "q_join_broadcast", sf_dir)
     assert plan.count("BroadcastHashJoin") >= 2
@@ -1570,9 +1677,11 @@ def test_nearest_join_is_bucket_banded(spark, sf_dir):
     # keys and EQUI-joins on the bucket — a hash-partitioned join,
     # never a nested loop evaluating supplier x customer (the raw
     # BETWEEN band form planned as BroadcastNestedLoopJoin; ADVICE
-    # r10); per-supplier argmin is WindowGroupLimit-pruned
+    # r10); the per-supplier argmin is a map-side min(struct(dist,
+    # custkey)) aggregate, not a window over every candidate row
     simple = plan_of(spark, "q_join_nearest", sf_dir, mode="simple")
-    assert "WindowGroupLimit" in simple
+    assert "partial_min(struct" in simple
+    assert "Window" not in simple
     assert "BroadcastNestedLoopJoin" not in simple
     assert "CartesianProduct" not in simple
     assert "ShuffledHashJoin" in simple or "SortMergeJoin" in simple
